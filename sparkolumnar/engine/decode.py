@@ -233,19 +233,44 @@ def make_decode_fn(verify: bool = False, columns: Optional[List[str]] = None,
     return fn
 
 
-def schema_of_blocks(blocks_df: DataFrame,
-                     columns: Optional[List[str]] = None) -> T.StructType:
-    """Spark schema of the decoded table, read from one block's metadata
-    (driver-side, payload columns pruned away)."""
+def _first_block_meta(blocks_df: DataFrame):
+    """One block's column entries (names, types, codecs) read driver-side
+    with payload columns pruned away, or None for an empty table. Read it
+    once per decode and derive both the filter types
+    (_arrow_types_of) and the output schema (_schema_from_meta)."""
     row = (blocks_df.selectExpr("columns.name as names",
                                 "columns.arrow_type as types",
                                 "columns.codec as codecs")
            .limit(1).collect())
-    if not row:
+    return row[0] if row else None
+
+
+def _arrow_types_of(meta) -> dict:
+    """{column name: arrow type string} of a _first_block_meta row."""
+    if meta is None:
+        return {}
+    return dict(zip(meta["names"], meta["types"]))
+
+
+def _blocks_arrow_types(blocks_df: DataFrame) -> dict:
+    """{column name: arrow type string} from one block's metadata."""
+    return _arrow_types_of(_first_block_meta(blocks_df))
+
+
+def schema_of_blocks(blocks_df: DataFrame,
+                     columns: Optional[List[str]] = None) -> T.StructType:
+    """Spark schema of the decoded table, read from one block's metadata
+    (driver-side, payload columns pruned away)."""
+    return _schema_from_meta(_first_block_meta(blocks_df), columns)
+
+
+def _schema_from_meta(meta, columns: Optional[List[str]] = None
+                      ) -> T.StructType:
+    if meta is None:
         raise ValueError("blocks table is empty; pass an explicit schema")
     fields = []
-    for name, ts, codec in zip(row[0]["names"], row[0]["types"],
-                               row[0]["codecs"]):
+    for name, ts, codec in zip(meta["names"], meta["types"],
+                               meta["codecs"]):
         if codec == SKETCH_CODEC:
             continue  # struct-child sketch entry: not a decodable column
         if columns is not None and name not in columns:
@@ -255,7 +280,7 @@ def schema_of_blocks(blocks_df: DataFrame,
     if columns is not None and not fields:
         raise ValueError(
             f"none of the requested columns {list(columns)} exist in the "
-            f"blocks table (available: {list(row[0]['names'])})")
+            f"blocks table (available: {list(meta['names'])})")
     return T.StructType(fields)
 
 
@@ -707,17 +732,6 @@ from functools import lru_cache as _lru_cache  # noqa: E402
 @_lru_cache(maxsize=4096)
 def _canon_zone_value_cached(value, arrow_type_str, session_tz):
     return _canon_zone_value_impl(value, arrow_type_str, session_tz)
-
-
-def _blocks_arrow_types(blocks_df: DataFrame) -> dict:
-    """{column name: arrow type string} from one block's metadata
-    (driver-side, payload columns pruned away)."""
-    row = (blocks_df.selectExpr("columns.name as names",
-                                "columns.arrow_type as types")
-           .limit(1).collect())
-    if not row:
-        return {}
-    return dict(zip(row[0]["names"], row[0]["types"]))
 
 
 _FILTER_OPS = ("between", "=", "==", "!=", ">=", "<=", ">", "<", "in",
@@ -1553,10 +1567,12 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
 
     target = None
     budgets = None
-    schema_src = blocks_df  # infer the schema before any pruning can
-    #                         empty the frame (limit past EOF, filters
-    #                         pruning everything) — empty result, not error
     exact = None
+    # ONE metadata read serves the filter types and the output schema; it
+    # runs before any pruning can empty the frame (limit past EOF, filters
+    # pruning everything) — empty result, not error
+    meta = (_first_block_meta(blocks_df) if filters or schema is None
+            else None)
     del_agg = None
     if deletes is not None:
         from .deletes import aggregate_deletes
@@ -1564,7 +1580,7 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
         del_agg = aggregate_deletes(deletes)
     if filters:
         groups = _normalize_filters(filters)
-        types = _blocks_arrow_types(blocks_df)
+        types = _arrow_types_of(meta)
         blocks_df = _apply_block_filters(blocks_df, groups, types)
         if prepass:
             blocks_df = _partition_prepass(blocks_df)
@@ -1595,7 +1611,7 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
                 "whole columns); whole blocks in the window are verified",
                 stacklevel=2)
     if schema is None:
-        schema = schema_of_blocks(schema_src, columns)
+        schema = _schema_from_meta(meta, columns)
     elif compat:
         from pyspark.sql.pandas.types import to_arrow_type
 
@@ -1619,7 +1635,7 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
         if missing:
             out_cols = list(columns)
             dec_columns = list(columns) + missing
-            schema = schema_of_blocks(schema_src, dec_columns)
+            schema = _schema_from_meta(meta, dec_columns)
     wanted = None
     if dec_columns is not None:
         wanted = list(dec_columns)
@@ -1642,15 +1658,15 @@ def decode_blocks(blocks_df: DataFrame, schema: Optional[T.StructType] = None,
         # joining a _del_mask column onto the scan only when the bitmap
         # set is too large to ship (pervasive deletes across a huge
         # table — the state Iceberg tells you to compact away too).
-        size = del_agg.agg(
-            F.count("*").alias("b"),
-            F.sum(F.octet_length(DELETE_MASK_COL)).alias("sz")
-        ).collect()[0]
-        if int(size["sz"] or 0) <= _DELETE_CLOSURE_MAX_BYTES:
+        # The aggregate is evaluated ONCE and sized on the driver (the
+        # fallback's broadcast builds the same bitmaps there anyway).
+        agg_rows = del_agg.collect()
+        size = sum(len(r[DELETE_MASK_COL]) for r in agg_rows)
+        if size <= _DELETE_CLOSURE_MAX_BYTES:
             del_masks = {
                 (r["snapshot_id"], r["part_id"], r["seq"]):
                     bytes(r[DELETE_MASK_COL])
-                for r in del_agg.collect()} or None
+                for r in agg_rows} or None
         else:
             # broadcast hash join keyed by the physically-unique
             # coordinates: the payload scan never shuffles, each task

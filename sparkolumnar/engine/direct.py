@@ -46,7 +46,7 @@ from pyspark.sql import SparkSession, functions as F
 from .blocks import arrow_blocks_schema
 from .encode import encode_batch
 from .selector import BALANCED
-from .tableio import TableIO
+from .tableio import TableIO, checkpoint_rows, checkpoint_totals
 
 DEFAULT_BATCH_ROWS = 32768
 
@@ -308,8 +308,7 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
                if pid not in done
                and (only_parts is None or pid in only_parts)]
     result = {"snapshot_id": snap, "parts_done_before": len(done),
-              "parts_encoded": 0, "n_blocks": 0, "n_rows": 0,
-              "bytes_in": 0, "bytes_out": 0}
+              **checkpoint_totals([])}
     if not pending:
         return result
     if blocks_root is None:
@@ -371,18 +370,9 @@ def encode_files_direct(spark: SparkSession, input_path: str, io: TableIO,
     meta = fdf.mapInArrow(
         work, "part_id int, n_blocks long, n_rows long, bytes_in long, "
               "bytes_out long, task_sec double").collect()
-    cp = spark.createDataFrame(
-        [(snap, r["part_id"], r["n_blocks"], r["n_rows"], r["bytes_in"],
-          r["bytes_out"], run_id, "committed") for r in meta],
-        "snapshot_id string, part_id int, n_blocks long, n_rows long, "
-        "bytes_in long, bytes_out long, run_id string, status string")
-    io.append_checkpoint(cp)
-    for r in meta:
-        result["parts_encoded"] += 1
-        result["n_blocks"] += r["n_blocks"]
-        result["n_rows"] += r["n_rows"]
-        result["bytes_in"] += r["bytes_in"]
-        result["bytes_out"] += r["bytes_out"]
+    cp_rows = checkpoint_rows(snap, run_id, meta)
+    io.append_checkpoint(cp_rows)
+    result.update(checkpoint_totals(cp_rows))
     return result
 
 
@@ -794,18 +784,7 @@ def encode_job_direct_write(spark, input_df, io: TableIO,
         overrides=overrides, cluster_by=cluster_by,
         cluster_layout=cluster_layout,
         skip_parts=set(done), filesystem=filesystem).collect()
-    result = {"snapshot_id": snap, "parts_done_before": len(done),
-              "parts_encoded": len(meta),
-              "n_blocks": sum(r["n_blocks"] for r in meta),
-              "n_rows": sum(r["n_rows"] for r in meta),
-              "bytes_in": sum(r["bytes_in"] for r in meta),
-              "bytes_out": sum(r["bytes_out"] for r in meta)}
-    if meta:
-        cp = spark.createDataFrame(
-            [(snap, int(r["part_id"]), int(r["n_blocks"]),
-              int(r["n_rows"]), int(r["bytes_in"]), int(r["bytes_out"]),
-              run_id, "committed") for r in meta],
-            "snapshot_id string, part_id int, n_blocks long, n_rows long, "
-            "bytes_in long, bytes_out long, run_id string, status string")
-        io.append_checkpoint(cp)
-    return result
+    cp_rows = checkpoint_rows(snap, run_id, meta)
+    io.append_checkpoint(cp_rows)
+    return {"snapshot_id": snap, "parts_done_before": len(done),
+            **checkpoint_totals(cp_rows)}

@@ -15,9 +15,15 @@ Protocol:
     a crash between blocks-commit and checkpoint-commit cannot duplicate
     data — the retry overwrites idempotently. Exactly-once output follows
     without any coordination beyond the checkpoint append.
- 4. The checkpoint row carries the per-partition metrics; fine-grained
-    per-column lineage is a payload-pruned projection of the blocks table
-    itself (lineage_of).
+ 4. The checkpoint rows carry the per-partition metrics and are derived
+    from what actually landed: ONE metadata-only aggregate over this
+    snapshot's blocks (count, sum(n_rows), and the per-block byte sums of
+    the non-sketch column entries — no explode, no join), collected to
+    the driver (one row per partition) and written ONCE
+    (TableIO.append_checkpoint: a single driver-side file for parquet).
+    The job result is built from the same rows. Fine-grained per-column
+    lineage is a payload-pruned projection of the blocks table itself
+    (lineage_of).
 """
 
 from __future__ import annotations
@@ -29,7 +35,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from .encode import encode_table
 from .selector import BALANCED
-from .tableio import TableIO, snapshot_of_input
+from .tableio import (TableIO, checkpoint_rows, checkpoint_totals,
+                      snapshot_of_input)
 
 
 def lineage_of(blocks: DataFrame) -> DataFrame:
@@ -105,32 +112,23 @@ def encode_job(spark, input_df: DataFrame, io: TableIO, key: Optional[str] = "ur
                           overrides=overrides, cluster_by=cluster_by,
                           cluster_layout=cluster_layout)
     io.write_blocks(blocks)
-    # derive checkpoint rows from what actually landed (metadata-only read)
-    landed = io.read_blocks()
-    per_part = (landed.filter(F.col("snapshot_id") == snap)
-                .groupBy("part_id")
-                .agg(F.count("*").alias("n_blocks"),
-                     F.sum("n_rows").alias("n_rows")))
-    new_parts = per_part.filter(~F.col("part_id").isin(list(done)) if done else F.lit(True))
-    metrics = (lineage_of(landed.filter(F.col("snapshot_id") == snap))
-               .groupBy("part_id")
-               .agg(F.sum("bytes_in").alias("bytes_in"),
-                    F.sum("bytes_out").alias("bytes_out")))
-    cp = (new_parts.join(metrics, "part_id")
-          .withColumn("snapshot_id", F.lit(snap))
-          .withColumn("run_id", F.lit(run_id))
-          .withColumn("status", F.lit("committed"))
-          .select("snapshot_id", "part_id", "n_blocks", "n_rows",
-                  "bytes_in", "bytes_out", "run_id", "status"))
-    io.append_checkpoint(cp)
-    agg = cp.agg(F.count("*"), F.sum("n_blocks"), F.sum("n_rows"),
-                 F.sum("bytes_in"), F.sum("bytes_out")).collect()[0]
-    return EncodeJobResult(
-        snapshot_id=snap,
-        parts_done_before=len(done),
-        parts_encoded=agg[0] or 0,
-        n_blocks=agg[1] or 0,
-        n_rows=agg[2] or 0,
-        bytes_in=agg[3] or 0,
-        bytes_out=agg[4] or 0,
-    )
+    # derive the checkpoint rows from what actually landed: one
+    # metadata-only aggregate, one row per partition of this snapshot
+    from .blocks import SKETCH_CODEC
+
+    def column_bytes(field):
+        return F.expr(f"aggregate(filter(columns, c -> c.codec != "
+                      f"'{SKETCH_CODEC}'), 0L, (acc, c) -> acc + c.{field})")
+
+    landed = (io.read_block_meta().filter(F.col("snapshot_id") == snap)
+              .groupBy("part_id")
+              .agg(F.count("*").alias("n_blocks"),
+                   F.sum("n_rows").alias("n_rows"),
+                   F.sum(column_bytes("bytes_in")).alias("bytes_in"),
+                   F.sum(column_bytes("bytes_out")).alias("bytes_out"))
+              .collect())
+    rows = checkpoint_rows(snap, run_id,
+                           [r for r in landed if r["part_id"] not in done])
+    io.append_checkpoint(rows)
+    return EncodeJobResult(snapshot_id=snap, parts_done_before=len(done),
+                           **checkpoint_totals(rows))

@@ -284,17 +284,54 @@ def sample_local_parquet(df, sample_rows: int = DEFAULT_SAMPLE_ROWS
     try:
         with ThreadPoolExecutor(max_workers=min(8, len(picks))) as pool:
             parts = list(pool.map(head, picks))
+        batches = [b for bs in parts for b in bs]
+        if not batches:
+            return None
+        # raises when the files' schemas diverge (widened types, evolved
+        # or reordered columns): Spark's reader reconciles those
+        sample = pa.Table.from_batches(batches)
     except Exception:
         return None  # unreadable/odd file: Spark's reader may still cope
-    batches = [b for bs in parts for b in bs]
-    if not batches:
-        return None
-    sample = pa.Table.from_batches(batches)
-    # hive-partition columns (or any reader-schema divergence) live outside
-    # the files; the Spark sample is the one that sees them
-    if set(sample.column_names) != {f.name for f in df.schema.fields}:
+    # hive-partition columns, a user read schema or types Spark reads
+    # differently (INT96 timestamps, unsigned ints) make the files disagree
+    # with the batches the encode will see; the Spark sample sees those
+    if _plan_types(sample.schema) != _spark_plan_types(df.schema):
         return None
     return sample
+
+
+def _plan_type(t: pa.DataType) -> pa.DataType:
+    """t without the differences the planner does not price: large vs
+    regular offsets, the time-zone name, child nullability."""
+    if pa.types.is_large_string(t):
+        return pa.string()
+    if pa.types.is_large_binary(t):
+        return pa.binary()
+    if pa.types.is_timestamp(t):
+        return pa.timestamp(t.unit, "UTC" if t.tz else None)
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return pa.list_(_plan_type(t.value_type))
+    if pa.types.is_map(t):
+        return pa.map_(_plan_type(t.key_type), _plan_type(t.item_type))
+    if pa.types.is_struct(t):
+        return pa.struct([pa.field(f.name, _plan_type(f.type)) for f in t])
+    return t
+
+
+def _plan_types(schema: pa.Schema) -> dict:
+    return {f.name: _plan_type(f.type) for f in schema}
+
+
+def _spark_plan_types(schema) -> Optional[dict]:
+    """_plan_types of the Arrow batches Spark hands the encode for a
+    DataFrame of this schema, or None when a type has no Arrow form."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    try:
+        return {f.name: _plan_type(to_arrow_type(f.dataType))
+                for f in schema.fields}
+    except TypeError:  # PySparkTypeError: no Arrow form for this type
+        return None
 
 
 def build_plan(df, mode: str = BALANCED,

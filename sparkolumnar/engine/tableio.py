@@ -17,9 +17,36 @@ from __future__ import annotations
 
 import hashlib
 import os
-from typing import Optional, Set
+import uuid
+from typing import List, Optional, Set
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+# One checkpoint row per committed (snapshot, partition). Every encode
+# entry point (lineage.encode_job, direct.encode_files_direct,
+# direct.encode_job_direct_write) builds its rows with checkpoint_rows and
+# commits them through TableIO.append_checkpoint.
+CHECKPOINT_SCHEMA = pa.schema([
+    pa.field("snapshot_id", pa.string()), pa.field("part_id", pa.int32()),
+    pa.field("n_blocks", pa.int64()), pa.field("n_rows", pa.int64()),
+    pa.field("bytes_in", pa.int64()), pa.field("bytes_out", pa.int64()),
+    pa.field("run_id", pa.string()), pa.field("status", pa.string())])
+_PART_METRICS = ("n_blocks", "n_rows", "bytes_in", "bytes_out")
+
+
+def checkpoint_rows(snapshot_id: str, run_id: str, parts) -> List[dict]:
+    """Checkpoint rows for per-partition metrics rows (each carrying
+    part_id, n_blocks, n_rows, bytes_in, bytes_out)."""
+    return [{"snapshot_id": snapshot_id, "part_id": int(p["part_id"]),
+             **{k: int(p[k]) for k in _PART_METRICS},
+             "run_id": run_id, "status": "committed"} for p in parts]
+
+
+def checkpoint_totals(rows: List[dict]) -> dict:
+    """The encode-job result fields summed over one commit's rows."""
+    return {"parts_encoded": len(rows),
+            **{k: sum(r[k] for r in rows) for k in _PART_METRICS}}
 
 
 def snapshot_of_input(df: DataFrame) -> str:
@@ -77,6 +104,14 @@ class TableIO:
                     .parquet(self.blocks_path))
         return self.spark.read.parquet(self.blocks_path)
 
+    def read_block_meta(self) -> DataFrame:
+        """Metadata-only view of the blocks table: snapshot_id, part_id,
+        n_rows and each column entry's codec/bytes_in/bytes_out. The
+        explicit read schema skips the footer-inference job and every
+        payload, validity and sketch leaf."""
+        return self.spark.read.schema(_BLOCK_META_DDL).parquet(
+            self.blocks_path)
+
     def has_blocks(self) -> bool:
         return _has_parquet(self.blocks_path)
 
@@ -101,13 +136,23 @@ class TableIO:
 
     # -- checkpoint -----------------------------------------------------
 
-    def append_checkpoint(self, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self.checkpoint_path)
+    def append_checkpoint(self, rows: List[dict]) -> None:
+        """Commit checkpoint rows as ONE parquet file written from the
+        driver (hidden temp name, then move): no Spark job, and nothing
+        is written when there are no rows."""
+        if not rows:
+            return
+        from .direct import _atomic_write_parquet
+
+        _atomic_write_parquet(
+            pa.Table.from_pylist(rows, schema=CHECKPOINT_SCHEMA),
+            f"{self.checkpoint_path}/cp-{uuid.uuid4().hex}.parquet")
 
     def read_checkpoint(self) -> Optional[DataFrame]:
         if not _has_parquet(self.checkpoint_path):
             return None
-        return self.spark.read.parquet(self.checkpoint_path)
+        return self.spark.read.schema(_checkpoint_struct()).parquet(
+            self.checkpoint_path)
 
     def committed_parts(self, snapshot_id: str) -> Set[int]:
         cp = self.read_checkpoint()
@@ -180,7 +225,14 @@ class IcebergTableIO(TableIO):
     def has_blocks(self) -> bool:
         return self.spark.catalog.tableExists(self.blocks_table)
 
-    def append_checkpoint(self, df: DataFrame) -> None:
+    def read_block_meta(self) -> DataFrame:
+        return self.read_blocks().select("snapshot_id", "part_id", "n_rows",
+                                         "columns")
+
+    def append_checkpoint(self, rows: List[dict]) -> None:
+        if not rows:
+            return
+        df = self.spark.createDataFrame(rows, _checkpoint_struct())
         if self.spark.catalog.tableExists(self.checkpoint_table):
             df.writeTo(self.checkpoint_table).append()
         else:
@@ -190,6 +242,17 @@ class IcebergTableIO(TableIO):
         if not self.spark.catalog.tableExists(self.checkpoint_table):
             return None
         return self.spark.table(self.checkpoint_table)
+
+
+_BLOCK_META_DDL = ("snapshot_id string, part_id int, n_rows long, "
+                   "columns array<struct<codec: string, bytes_in: long, "
+                   "bytes_out: long>>")
+
+
+def _checkpoint_struct():
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(CHECKPOINT_SCHEMA)
 
 
 def _has_parquet(path: str) -> bool:

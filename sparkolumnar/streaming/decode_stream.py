@@ -19,7 +19,8 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from ..engine.decode import make_decode_fn, schema_of_blocks
+from ..engine.decode import (_first_block_meta, _schema_from_meta,
+                             make_decode_fn)
 
 
 def decode_stream(spark: SparkSession, blocks_path: str,
@@ -56,20 +57,22 @@ def decode_stream(spark: SparkSession, blocks_path: str,
                 # schema (the decoded batches carry the extra columns) —
                 # re-infer from the extended column set
                 schema = None
+    # one metadata read serves the output schema and the filter types
+    meta = _first_block_meta(static) if filters or schema is None else None
     if schema is None:
-        schema = schema_of_blocks(static, columns)
+        schema = _schema_from_meta(meta, columns)
     stream = (spark.readStream.schema(static.schema)
               .option("maxFilesPerTrigger", 16)
               .parquet(blocks_path))
     exact = None
     if filters:
         from ..engine.decode import (_apply_block_filters,
-                                     _blocks_arrow_types,
+                                     _arrow_types_of,
                                      _exact_filter_expr,
                                      _normalize_filters)
 
         groups = _normalize_filters(filters)
-        types = _blocks_arrow_types(static)
+        types = _arrow_types_of(meta)
         stream = _apply_block_filters(stream, groups, types)
         exact = _exact_filter_expr(groups)
     if columns is not None:

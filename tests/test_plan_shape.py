@@ -341,3 +341,33 @@ def test_dml_plans_shuffle_free(spark, tmp_path):
     out = decode_blocks(blocks, deletes=d)
     plan = _plan_of(out)
     assert "Exchange" not in plan and "Join" not in plan
+
+
+def test_divergent_parquet_inputs_fall_back_to_spark_sample(spark, tmp_path):
+    """Files whose `x` column is int64 in one and int32 in the other
+    cannot form one driver-side sample: build_plan falls back to the
+    Spark sample instead of crashing encode_job, and the table decodes
+    back bit-exact."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sparkolumnar.engine import decode_blocks
+    from sparkolumnar.engine.lineage import encode_job
+    from sparkolumnar.engine.plan import sample_local_parquet
+
+    src = tmp_path / "div"
+    src.mkdir()
+    for i, typ in enumerate((pa.int64(), pa.int32())):
+        pq.write_table(pa.table({
+            "x": pa.array(range(i * 500, i * 500 + 500), typ),
+            "s": pa.array([f"v{j % 7}" for j in range(500)])}),
+            str(src / f"part-{i:05d}.parquet"))
+    df = spark.read.parquet(str(src))
+    assert df.schema.simpleString() == "struct<x:bigint,s:string>"
+    assert sample_local_parquet(df) is None
+    io = TableIO(spark, str(tmp_path / "t"))
+    r = encode_job(spark, df, io, key="x", partitions=2)
+    assert r.n_rows == 1000
+    out = decode_blocks(io.read_blocks(), verify=True)
+    assert out.schema.simpleString() == "struct<x:bigint,s:string>"
+    assert out.exceptAll(df).count() == 0 and df.exceptAll(out).count() == 0

@@ -136,3 +136,96 @@ def test_cluster_by_snapshot_identity_includes_layout(spark, pages, tmp_path):
     r2 = encode_job(spark, pages, io, partitions=2, run_id="r2")
     assert r2.snapshot_id == base and r2.parts_done_before == 0
     assert CLUSTER_LAYOUT_VERSION >= 2
+
+
+def _checkpoint_by_part(io, snap):
+    rows = (io.read_checkpoint().filter(F.col("snapshot_id") == snap)
+            .collect())
+    out = {r["part_id"]: (r["n_blocks"], r["n_rows"], r["bytes_in"],
+                          r["bytes_out"]) for r in rows}
+    assert len(out) == len(rows)  # one checkpoint row per part
+    return out
+
+
+def _join_definition(io, snap):
+    """The per-part checkpoint metrics as the join of per-part block
+    counts with lineage_of's byte sums."""
+    landed = io.read_blocks().filter(F.col("snapshot_id") == snap)
+    per_part = landed.groupBy("part_id").agg(
+        F.count("*").alias("n_blocks"), F.sum("n_rows").alias("n_rows"))
+    metrics = lineage_of(landed).groupBy("part_id").agg(
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("bytes_out").alias("bytes_out"))
+    return {r["part_id"]: (r["n_blocks"], r["n_rows"], r["bytes_in"],
+                           r["bytes_out"])
+            for r in per_part.join(metrics, "part_id").collect()}
+
+
+def _checkpoint_files(io):
+    import os
+
+    return sorted(f for f in os.listdir(io.checkpoint_path)
+                  if f.endswith(".parquet"))
+
+
+def test_checkpoint_rows_match_landed_blocks(spark, pages, tmp_path):
+    """Each part's checkpoint row equals the per-part block aggregate
+    joined with lineage_of's byte sums, after a kill-and-resume and after
+    a no-op re-run; the struct column's sketch-only entries carry no
+    lineage; a re-run with every part done writes no checkpoint file."""
+    from sparkolumnar.engine.blocks import SKETCH_CODEC
+
+    df = pages.withColumn("meta", F.struct(
+        F.length("text").alias("n_chars"), F.col("lang").alias("lang")))
+    io = TableIO(spark, str(tmp_path / "cp"))
+    r1 = encode_job(spark, df, io, key="url", partitions=4, run_id="r1",
+                    only_parts={1, 3})
+    snap = r1.snapshot_id
+    assert _checkpoint_by_part(io, snap) == _join_definition(io, snap)
+    assert set(_checkpoint_by_part(io, snap)) == {1, 3}
+    r2 = encode_job(spark, df, io, key="url", partitions=4, run_id="r2")
+    assert r2.parts_encoded == 2
+    expected = _join_definition(io, snap)
+    assert set(expected) == {0, 1, 2, 3}
+    assert _checkpoint_by_part(io, snap) == expected
+    n_sketch = (io.read_blocks().select(F.explode("columns").alias("c"))
+                .filter(F.col("c.codec") == SKETCH_CODEC).count())
+    assert n_sketch > 0  # the struct children's sketch entries exist
+    # the job result sums the rows this run committed
+    assert (r1.n_rows + r2.n_rows, r1.bytes_out + r2.bytes_out) == (
+        sum(v[1] for v in expected.values()),
+        sum(v[3] for v in expected.values()))
+    files = _checkpoint_files(io)
+    assert len(files) == 2  # one file per committing run
+    r3 = encode_job(spark, df, io, key="url", partitions=4, run_id="r3")
+    assert (r3.parts_done_before, r3.parts_encoded) == (4, 0)
+    assert _checkpoint_files(io) == files
+    assert _checkpoint_by_part(io, snap) == expected
+
+
+def test_checkpoint_mixes_spark_and_driver_written_files(spark, tmp_path):
+    """A checkpoint directory written by Spark (an older writer) and then
+    appended to from the driver reads back with one schema, and the skip
+    set covers the parts of both files."""
+    from sparkolumnar.engine.tableio import checkpoint_rows
+
+    io = TableIO(spark, str(tmp_path / "mixed"))
+    (spark.createDataFrame(
+        [("s1", 0, 2, 100, 4000, 1000, "r1", "committed")],
+        "snapshot_id string, part_id int, n_blocks long, n_rows long, "
+        "bytes_in long, bytes_out long, run_id string, status string")
+     .coalesce(1).write.mode("append").parquet(io.checkpoint_path))
+    spark_files = _checkpoint_files(io)
+    io.append_checkpoint(checkpoint_rows("s1", "r2", [
+        {"part_id": 1, "n_blocks": 3, "n_rows": 150, "bytes_in": 6000,
+         "bytes_out": 1500}]))
+    io.append_checkpoint([])  # nothing to commit: no file
+    assert len(spark_files) == 1 and len(_checkpoint_files(io)) == 2
+    want = ("struct<snapshot_id:string,part_id:int,n_blocks:bigint,"
+            "n_rows:bigint,bytes_in:bigint,bytes_out:bigint,"
+            "run_id:string,status:string>")
+    assert spark.read.parquet(io.checkpoint_path).schema.simpleString() \
+        == want
+    assert io.read_checkpoint().schema.simpleString() == want
+    assert io.committed_parts("s1") == {0, 1}
+    assert io.committed_parts("s2") == set()
